@@ -11,8 +11,19 @@ endpoint surface (executor.py:73-257) so a reference user can switch:
     /status  (executor.py:246) -> .status()
 
 Differences by design (Spark-first, north star):
-- state is immutable DataFrames snapshotted to parquet under `workspace`
-  (vectors + docstore), not a mutable in-process index + memmap;
+- state is immutable DataFrames snapshotted to parquet under `workspace`,
+  not a mutable in-process index + memmap. dump() commits the vectors and
+  the docstore as ONE version (maintenance.dump):
+
+      workspace/CURRENT              pointer naming the committed version
+      workspace/v<N>/vectors/        parquet (id, internal_id, emb)
+      workspace/v<N>/docstore/       parquet (id, payload columns)
+
+  A new engine on the workspace follows the pointer. Each dump writes a
+  fresh v<N>, swaps the pointer, re-roots the engine's state on the files
+  it just wrote and deletes the other v<N> directories, so a workspace has
+  ONE writer engine at a time, and a search() result — a lazy plan over
+  the current version — must be consumed before the next dump();
 - search is EXACT (recall 1.0): `ef_query`/`ef_construction`/`max_connection`
   are accepted and ignored with the reasoning documented (executor.py:22-24
   tune an approximation this engine does not make);
@@ -27,7 +38,6 @@ Differences by design (Spark-first, north star):
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,21 +48,6 @@ from executor_u1mindexer_spark.operators import knn, maintenance as M, traverse
 VECTORS = "vectors"
 DOCSTORE = "docstore"
 
-# Docstore ingest is LSM-style since r04: index() APPENDS the batch payload
-# (tagged with a batch number) instead of eagerly anti-joining the whole
-# docstore per batch. The r03 eager form cost one full-docstore scan +
-# checkpoint per batch — O(B * S) for B batches over a docstore of size S;
-# the append form costs O(batch) per index() and ONE keep-latest compaction
-# (window on id over the appended log) at the next read point (search
-# payload / dump / status) or every DOCSTORE_COMPACT_EVERY appends,
-# whichever comes first. Crossover: a single ingest-then-read session pays
-# the same one compaction either way; a B-batch ingest session saves B-1
-# full-docstore rewrites. Deletes stay eager anti-joins (they must drop all
-# copies) — each adds one O(1)-analysis broadcast layer, bounded by the
-# compaction checkpoint at the next read.
-DS_BATCH = "__ds_batch"
-DOCSTORE_COMPACT_EVERY = 16
-
 # Iterated mutations MUST truncate lineage every batch: one upsert embeds
 # the previous state's LOGICAL plan ~16 times (kept/updated/inserted/anti
 # branches, the prior-count aggregate, and the dense-rank key pipeline), so
@@ -61,8 +56,10 @@ DOCSTORE_COMPACT_EVERY = 16
 # not help: the cache dedupes execution, not analysis. localCheckpoint
 # (eager) collapses the plan to a single LogicalRDD at the cost of one
 # materialization per batch — the same eager per-batch processing the
-# reference endpoints do. On a real cluster a durable dump()/load() snapshot
-# is the robust form (localCheckpoint does not survive executor loss).
+# reference endpoints do. The docstore's keyed upsert (anti-join + union)
+# grows linearly instead, and is truncated at the same point. On a real
+# cluster dump() is the robust form: it re-roots both frames on durable
+# parquet (localCheckpoint does not survive executor loss).
 
 
 class U1MIndexerSpark:
@@ -90,19 +87,10 @@ class U1MIndexerSpark:
             raise ValueError(f"max_elements must be >= 0, got {max_elements}")
         self.max_elements = max_elements  # None = unbounded (the default)
         self.workspace = workspace
-        self._vectors = self._empty_vectors()
-        self._docstore: DataFrame | None = None
-        self._ds_pending = 0  # appended batches since the last compaction
-        self._ds_layers = 0  # delete anti-join layers since the last checkpoint
-        self._ds_batch_no = 0
-        if workspace and os.path.exists(os.path.join(workspace, VECTORS)):
-            self._vectors = M.load(spark, os.path.join(workspace, VECTORS))
-            doc_path = os.path.join(workspace, DOCSTORE)
-            if os.path.exists(doc_path):
-                # a dumped docstore is already compacted; batch 0 = loaded
-                self._docstore = M.load(spark, doc_path).withColumn(
-                    DS_BATCH, F.lit(0)
-                )
+        self.clear()
+        committed = M.load(spark, workspace) if workspace else {}
+        self._vectors = committed.get(VECTORS, self._vectors)
+        self._docstore = committed.get(DOCSTORE)
 
     # -- helpers ---------------------------------------------------------
 
@@ -139,56 +127,22 @@ class U1MIndexerSpark:
         )
 
     def _before_mutation(self) -> None:
-        """Truncate pending VECTOR mutation lineage (see module note)
-        BEFORE stacking another level: coalesce caps the partition fan-out
-        (each upsert unions 3 branches whose broadcast joins preserve child
+        """Truncate pending mutation lineage (see module note) BEFORE
+        stacking another level: coalesce caps the partition fan-out (each
+        upsert unions 3 branches whose broadcast joins preserve child
         partitioning — partitions would multiply ~3x per batch), then an
-        eager localCheckpoint collapses the logical plan to one LogicalRDD
-        so plan analysis stays O(1) per batch. Deferred to the NEXT
-        mutation so the common one-shot flow (index once, then dump/search)
-        pays no extra materialization. The docstore is NOT checkpointed
-        here: its append-only lineage grows one externally-rooted union per
-        batch (linear, not the vectors' ~16x self-embedding), and the
-        compaction points own its truncation (see module note)."""
-        if not getattr(self, "_dirty", False):
+        eager localCheckpoint collapses each frame's logical plan to one
+        LogicalRDD so plan analysis stays O(1) per batch. Deferred to the
+        NEXT mutation so the common one-shot flow (index once, then
+        dump/search) pays no extra materialization; a dump() re-roots the
+        state on its files, which leaves nothing to truncate."""
+        if not self._dirty:
             return
         self._dirty = False
         n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         self._vectors = self._vectors.coalesce(n).localCheckpoint(eager=True)
-
-    def _docstore_compact(self) -> None:
-        """Collapse the appended batch log to keep-latest-batch per id —
-        the same state the r03 eager anti-join maintained per batch (ids
-        duplicated WITHIN one batch keep all their rows, as before). One
-        shuffle on id, then an eager checkpoint so later reads and delete
-        layers start from a flat plan. Delete-ONLY lineage (anti-join
-        layers with no pending appends) needs no window — just the
-        checkpoint — but it must still truncate, else a delete-heavy
-        session re-executes every anti-join on every read."""
-        if self._docstore is None or (self._ds_pending == 0 and self._ds_layers == 0):
-            return
-        ds = self._docstore
-        if self._ds_pending > 0:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(M.ID)
-            ds = (
-                ds.withColumn("__ds_max", F.max(DS_BATCH).over(w))
-                .filter(F.col(DS_BATCH) == F.col("__ds_max"))
-                .drop("__ds_max")
-            )
-        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        self._docstore = ds.coalesce(n).localCheckpoint(eager=True)
-        self._ds_pending = 0
-        self._ds_layers = 0
-
-    def _docstore_view(self) -> DataFrame | None:
-        """Compacted docstore without bookkeeping columns — what payload
-        joins, dump, and status consume."""
-        if self._docstore is None:
-            return None
-        self._docstore_compact()
-        return self._docstore.drop(DS_BATCH)
+        if self._docstore is not None:
+            self._docstore = self._docstore.coalesce(n).localCheckpoint(eager=True)
 
     # -- endpoints -------------------------------------------------------
 
@@ -224,7 +178,7 @@ class U1MIndexerSpark:
         stored = self._vectors.select(
             F.col(M.ID).alias("vec_id"), F.col(M.EMB).alias("embedding")
         )
-        payload = self._docstore_view() if with_payload else None
+        payload = self._docstore if with_payload else None
         return knn.knn_search(
             stored,
             queries,
@@ -284,7 +238,7 @@ class U1MIndexerSpark:
             # hnswlib element-count semantics (a delete never refunds
             # room). Internal ids may renumber into freed top slots, but
             # two live rows can never collide.
-            cap = self.max_elements - getattr(self, "_slot_debt", 0)
+            cap = self.max_elements - self._slot_debt
             new_state, rejected = M.upsert_capacity_bound(
                 self._vectors, batch, max(cap, 0)
             )
@@ -297,24 +251,15 @@ class U1MIndexerSpark:
             )
         else:
             self._vectors = M.upsert(self._vectors, batch).select(M.ID, M.IID, M.EMB)
-        self._ds_batch_no += 1
-        payload = (
-            docs.withColumnRenamed(id_col, M.ID)
-            .drop(vec_col)
-            .withColumn(DS_BATCH, F.lit(self._ds_batch_no))
-        )
+        payload = docs.withColumnRenamed(id_col, M.ID).drop(vec_col)
         if self._docstore is None:
             self._docstore = payload
         else:
-            # LSM append: O(batch) per call; keep-latest resolution happens
-            # at the next read / every DOCSTORE_COMPACT_EVERY batches (see
-            # module note for the crossover vs the eager per-batch anti-join)
-            self._docstore = self._docstore.unionByName(
-                payload, allowMissingColumns=True
-            )
-            self._ds_pending += 1
-            if self._ds_pending >= DOCSTORE_COMPACT_EVERY:
-                self._docstore_compact()
+            # keyed upsert: the batch's payload replaces every stored row of
+            # its ids (ids repeated WITHIN the batch keep all their rows)
+            self._docstore = self._docstore.join(
+                F.broadcast(payload.select(M.ID)), on=M.ID, how="left_anti"
+            ).unionByName(payload, allowMissingColumns=True)
         self._dirty = True
         return rejected
 
@@ -389,51 +334,47 @@ class U1MIndexerSpark:
             freed_top = (int(row["mark_all"]) + 1) - (
                 int(row["mark_surv"]) + 1 if row["mark_surv"] is not None else 0
             )
-            self._slot_debt = getattr(self, "_slot_debt", 0) + max(freed_top, 0)
-        self._tombstones = getattr(self, "_tombstones", 0) + n_hit
+            self._slot_debt += max(freed_top, 0)
+        self._tombstones += n_hit
         self._vectors = M.delete_by_ids(self._vectors, ids_df)
         if self._docstore is not None:
-            # eager anti-join over the appended log: drops every copy of
-            # the id regardless of batch, so no compaction is needed first;
-            # the layer still counts toward lineage truncation (a
-            # delete-heavy session would otherwise stack anti-joins that
-            # every read re-executes)
             self._docstore = self._docstore.join(
                 F.broadcast(ids_df.select(M.ID)), on=M.ID, how="left_anti"
             )
-            self._ds_layers += 1
-            if self._ds_layers >= DOCSTORE_COMPACT_EVERY:
-                self._docstore_compact()
         self._dirty = True
 
     def dump(self) -> None:
-        """Snapshot state to the workspace (executor.py:227-236)."""
+        """Commit vectors + docstore to the workspace as one version
+        (executor.py:227-236) and continue from the committed files — see
+        the module docstring for the layout and maintenance.dump for the
+        commit steps. A dump that fails before its commit leaves the
+        workspace and the engine's state as they were."""
         if not self.workspace:
             raise ValueError("no workspace configured")
-        M.dump(self._vectors, os.path.join(self.workspace, VECTORS))
-        ds = self._docstore_view()
-        if ds is not None:
-            M.dump(ds, os.path.join(self.workspace, DOCSTORE))
+        frames = {VECTORS: self._vectors}
+        if self._docstore is not None:
+            frames[DOCSTORE] = self._docstore
+        committed = M.dump(self.workspace, frames)
+        self._vectors = committed[VECTORS]
+        self._docstore = committed.get(DOCSTORE)
+        self._dirty = False
 
     def clear(self) -> None:
-        """Drop everything, keep config (executor.py:238-244)."""
+        """Drop everything, keep config (executor.py:238-244); also the
+        initial state of a new engine."""
         self._vectors = self._empty_vectors()
-        self._docstore = None
-        self._ds_pending = 0
-        self._ds_layers = 0
-        self._ds_batch_no = 0
-        self._tombstones = 0
-        self._slot_debt = 0
-        self._dirty = False
+        self._docstore: DataFrame | None = None
+        self._tombstones = 0  # deleted slots, counted by status()
+        self._slot_debt = 0  # freed top slots capacity admission still counts
+        self._dirty = False  # lineage grown since the last truncation point
 
     def status(self) -> dict[str, int]:
         """Counts (executor.py:246-257): count_indexed includes tombstoned
         slots, matching hnswlib element_count semantics. Both counts run in
         ONE Spark job (the scalar aggregates cross-join into a single 1-row
         plan) instead of two separate collects."""
-        tombstones = getattr(self, "_tombstones", 0)
         vec_n = self._vectors.agg(F.count(F.lit(1)).alias("n_vec"))
-        ds = self._docstore_view()
+        ds = self._docstore
         if ds is not None:
             row = vec_n.crossJoin(
                 ds.agg(F.count(F.lit(1)).alias("n_doc"))
@@ -443,8 +384,8 @@ class U1MIndexerSpark:
             active = vec_n.collect()[0]["n_vec"]
             dam = active
         return {
-            "count_indexed": active + tombstones,
+            "count_indexed": active + self._tombstones,
             "count_active": active,
-            "count_deleted": tombstones,
+            "count_deleted": self._tombstones,
             "size_dam": dam,
         }

@@ -28,6 +28,8 @@ is a window over the (small) batch only, not over the state.
 from __future__ import annotations
 
 import os
+import re
+import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -37,6 +39,7 @@ ID = "id"
 IID = "internal_id"
 EMB = "emb"
 SEQ = "seq"  # explicit arrival-order column (reference: list position)
+POINTER = "CURRENT"  # names the committed v<N> of a dump() workspace
 
 
 def dense_rank_by(df: DataFrame, order_col: str, out_col: str) -> DataFrame:
@@ -304,29 +307,60 @@ def status_counts(state: DataFrame, active: DataFrame) -> DataFrame:
     )
 
 
-def dump(state: DataFrame, path: str) -> None:
-    """Persist state (the /dump endpoint, executor.py:227-236) — one parquet
-    snapshot instead of index.bin + ids.json + memmap flush.
+def dump(workspace: str, frames: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """Persist state (the /dump endpoint, executor.py:227-236) as ONE
+    committed version — the parquet counterpart of index.bin + ids.json +
+    memmap flush, written and published as a unit.
 
-    Written to a temp dir then swapped: the state DataFrame's lineage may
-    lazily READ the very path being overwritten (load -> upsert -> dump),
-    and a direct overwrite would delete the input mid-plan. The swap makes
-    dump safe to call on state derived from a previous dump — on a real
-    deployment this is the snapshot-then-commit pattern (or a table format's
-    transactional MERGE).
+    Layout: ``workspace/v<N>/<name>`` per frame plus a ``CURRENT`` pointer
+    naming the committed version. A dump writes every frame into a fresh
+    ``v<N>`` (never one that exists, so a lineage reading the previous
+    version is never overwritten mid-plan), then commits by atomically
+    replacing the pointer (temp file, fsync, ``os.replace``), re-reads the
+    frames from the files just written with their known schemas (no
+    schema-inference job), and finally removes every OTHER ``v<N>``
+    directory — nothing else in the workspace. A process crash at any step
+    leaves the pointer on a complete version: the old one before the replace, the
+    new one after it. Returns the re-read frames; a caller holding lazy
+    plans over an older version must run them before the next dump.
     """
-    import shutil
+    version = f"v{max((int(v[1:]) for v in _versions(workspace)), default=0) + 1}"
+    for name, df in frames.items():
+        df.write.parquet(os.path.join(workspace, version, name))
+    tmp = os.path.join(workspace, POINTER + ".tmp")
+    with open(tmp, "w") as f:
+        f.write(version)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, os.path.join(workspace, POINTER))
+    spark = next(iter(frames.values())).sparkSession
+    committed = load(spark, workspace, {name: df.schema for name, df in frames.items()})
+    for v in _versions(workspace):
+        if v != version:
+            # best effort: a version left behind is removed by the next dump
+            shutil.rmtree(os.path.join(workspace, v), ignore_errors=True)
+    return committed
 
-    tmp = path.rstrip("/") + "._tmp"
-    state.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.replace(tmp, path)
+
+def load(spark, workspace: str, schemas: dict | None = None) -> dict[str, DataFrame]:
+    """Restore the committed version of ``workspace`` (executor.py:51-57)
+    as {frame name: DataFrame}; {} when nothing was ever committed. Known
+    ``schemas`` skip parquet schema inference."""
+    try:
+        with open(os.path.join(workspace, POINTER)) as f:
+            root = os.path.join(workspace, f.read())
+    except FileNotFoundError:
+        return {}
+    if schemas is None:
+        return {n: spark.read.parquet(os.path.join(root, n)) for n in os.listdir(root)}
+    return {n: spark.read.schema(s).parquet(os.path.join(root, n)) for n, s in schemas.items()}
 
 
-def load(spark, path: str) -> DataFrame:
-    """Restore state (executor.py:51-57)."""
-    return spark.read.parquet(path)
+def _versions(workspace: str) -> list[str]:
+    """Every ``v<N>`` entry of the workspace."""
+    if not os.path.isdir(workspace):
+        return []
+    return [e for e in os.listdir(workspace) if re.fullmatch(r"v\d+", e)]
 
 
 def clear(spark, like: DataFrame) -> DataFrame:

@@ -172,8 +172,8 @@ def dump_load_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "/tmp/spark_graft_state",
         f"{os.path.basename(sf_dir.rstrip('/'))}_{uuid.uuid4().hex}",
     )
-    M.dump(state, path)
-    back = M.load(spark, path)
+    M.dump(path, {"state": state})
+    back = M.load(spark, path)["state"]
     # norm is floored to micro-units and summed as integers so the aggregate
     # is order-independent (double addition is not associative; partition
     # order must not affect the driver's value hash).

@@ -3,6 +3,8 @@ search → update → delete → dump → load → status) through U1MIndexerSpa
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -108,12 +110,12 @@ def test_dump_load_roundtrip_preserves_search(spark, engine, sf_dir, tmp_path):
 
 def test_dump_after_load_same_workspace(spark, engine, tmp_path):
     """dump over a workspace the state was LOADED from (lineage reads the
-    path being overwritten) — must not corrupt the snapshot."""
+    version being superseded) — must not corrupt the snapshot."""
     engine.dump()
     eng2 = U1MIndexerSpark(spark, dim=64, workspace=str(tmp_path))
     upd = spark.createDataFrame([(3, [2.0] * 64)], "doc_id long, embedding array<double>")
     eng2.index(upd)
-    eng2.dump()  # self-overwrite cycle
+    eng2.dump()  # supersedes the version eng2 was loaded from
     eng3 = U1MIndexerSpark(spark, dim=64, workspace=str(tmp_path))
     assert eng3.status()["count_active"] == 100
 
@@ -224,9 +226,8 @@ def test_clear_empties(spark, engine):
 
 
 def test_docstore_append_keeps_latest_payload_across_batches(spark, tmp_path):
-    """LSM docstore: index() appends; keep-latest compaction at the read
-    point must resolve overlapping ids to the NEWEST batch's payload (the
-    state the old eager anti-join maintained per batch)."""
+    """The docstore is a keyed upsert like the vectors: overlapping ids
+    resolve to the NEWEST batch's payload."""
     eng = U1MIndexerSpark(spark, dim=2, workspace=str(tmp_path))
     for b in range(5):
         docs = spark.createDataFrame(
@@ -234,29 +235,23 @@ def test_docstore_append_keeps_latest_payload_across_batches(spark, tmp_path):
             "doc_id long, embedding array<double>, text string",
         )
         eng.index(docs)
-    assert eng._ds_pending > 0  # appends really were deferred
-    st = eng.status()  # read point -> compaction
+    st = eng.status()
     assert st["count_active"] == 4
     assert st["size_dam"] == 4  # duplicates resolved, not counted
-    assert eng._ds_pending == 0
     q = spark.createDataFrame([(0, [4.0, 1.0])], "query_id long, query_embedding array<double>")
     rows = eng.search(q, limit=1).collect()
     assert rows[0].text.startswith("text-b4-")  # newest batch's payload won
 
 
 def test_docstore_compacts_every_threshold_batches(spark, tmp_path):
-    from executor_u1mindexer_spark import engine as E
-
     eng = U1MIndexerSpark(spark, dim=2, workspace=str(tmp_path))
-    for b in range(E.DOCSTORE_COMPACT_EVERY + 1):
+    for b in range(17):
         docs = spark.createDataFrame(
             [(b, [1.0, float(b)], f"t{b}")],
             "doc_id long, embedding array<double>, text string",
         )
         eng.index(docs)
-    # the threshold compaction fired at least once mid-ingest
-    assert eng._ds_pending < E.DOCSTORE_COMPACT_EVERY
-    assert eng.status()["size_dam"] == E.DOCSTORE_COMPACT_EVERY + 1
+    assert eng.status()["size_dam"] == 17
 
 
 def test_docstore_delete_then_reindex_resolves_to_new_payload(spark, tmp_path):
@@ -274,27 +269,134 @@ def test_docstore_delete_then_reindex_resolves_to_new_payload(spark, tmp_path):
 
 
 def test_docstore_delete_only_lineage_truncates(spark, tmp_path):
-    """Delete-heavy sessions must still checkpoint the docstore: each
-    delete stacks an anti-join layer, and the next read (or every 16
-    deletes) collapses it — otherwise every read re-executes every
-    anti-join since the last compaction."""
-    from executor_u1mindexer_spark import engine as E
-
+    """Delete-heavy sessions must still truncate the docstore: each delete
+    stacks an anti-join layer, and the per-mutation checkpoint collapses
+    it — otherwise every read re-executes every anti-join."""
     eng = U1MIndexerSpark(spark, dim=2, workspace=str(tmp_path))
     docs = spark.createDataFrame(
         [(i, [1.0, float(i)], f"t{i}") for i in range(40)],
         "doc_id long, embedding array<double>, text string",
     )
     eng.index(docs)
-    eng.status()  # compaction point: append log flattened
-    for i in range(E.DOCSTORE_COMPACT_EVERY + 2):
+    eng.status()
+    for i in range(18):
         eng.delete([i])
-    # the threshold compaction fired mid-stream even with no reads
-    assert eng._ds_layers < E.DOCSTORE_COMPACT_EVERY
-    st = eng.status()  # read point truncates the remainder
-    assert eng._ds_layers == 0
-    assert st["size_dam"] == 40 - (E.DOCSTORE_COMPACT_EVERY + 2)
+    st = eng.status()
+    assert st["size_dam"] == 40 - 18
     plan_lines = (
         eng._docstore._jdf.queryExecution().analyzed().numberedTreeString().count("\n")
     )
     assert plan_lines < 30, plan_lines  # flat LogicalRDD, not stacked joins
+
+
+# -- workspace snapshots ------------------------------------------------------
+
+
+def test_reopen_dump_then_search(spark, engine, sf_dir, tmp_path):
+    """A reopened engine reads the committed version; its own dump() must
+    not pull those files out from under the state it then searches."""
+    engine.dump()
+    eng2 = U1MIndexerSpark(spark, dim=64, workspace=str(tmp_path))
+    eng2.dump()
+    q = (
+        tables.load(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") == 7)
+        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding"))
+    )
+    rows = eng2.search(q, limit=5).orderBy("rank").collect()
+    assert len(rows) == 5 and rows[0].vec_id == 7 and rows[0].text is not None
+
+
+def test_reopen_index_dump_index(spark, engine, tmp_path):
+    engine.dump()
+    eng2 = U1MIndexerSpark(spark, dim=64, workspace=str(tmp_path))
+    mk = lambda i: spark.createDataFrame(
+        [(i, [float(i)] * 64, f"t{i}")], "doc_id long, embedding array<double>, text string"
+    )
+    eng2.index(mk(1000))
+    eng2.dump()
+    eng2.index(mk(1001))
+    eng2.dump()
+    assert eng2.status()["count_active"] == 102
+    st = U1MIndexerSpark(spark, dim=64, workspace=str(tmp_path)).status()
+    assert st["count_active"] == 102 and st["size_dam"] == 102
+
+
+def _committed_pair(spark, ws):
+    """(vector ids, docstore (id, text) rows) a fresh engine on `ws` sees."""
+    eng = U1MIndexerSpark(spark, dim=2, workspace=ws)
+    ids = sorted(r.id for r in eng._vectors.collect())
+    docs = sorted((r.id, r.text) for r in eng._docstore.collect())
+    return ids, docs
+
+
+@pytest.mark.parametrize(
+    "step", ["vectors", "docstore", "pointer_tmp", "pointer_replace", "gc"]
+)
+def test_dump_fault_leaves_old_or_new_pair(spark, tmp_path, monkeypatch, step):
+    """A crash at any dump() step leaves a fresh engine on the workspace
+    with the old (vectors, docstore) pair — a fault before the pointer
+    replace — or the new one, never a mix and never nothing."""
+    from pyspark.sql import DataFrameWriter
+
+    from executor_u1mindexer_spark.operators import maintenance as M
+
+    ws = str(tmp_path / "ws")
+    mk = lambda ids, tag: spark.createDataFrame(
+        [(i, [1.0, float(i)], f"{tag}{i}") for i in ids],
+        "doc_id long, embedding array<double>, text string",
+    )
+    eng = U1MIndexerSpark(spark, dim=2, workspace=ws)
+    eng.index(mk([0, 1, 2], "old"))
+    eng.dump()
+    old = _committed_pair(spark, ws)
+    eng.index(mk([2, 3], "new"))
+    eng.delete([0])
+
+    def crash(*_a, **_k):
+        raise OSError(f"injected fault at {step}")
+
+    with monkeypatch.context() as mp:
+        if step in ("vectors", "docstore"):
+            real = DataFrameWriter.parquet
+
+            def write(self, path, *a, **k):
+                real(self, path, *a, **k)  # files land, the dump dies after
+                if path.endswith(step):
+                    crash()
+
+            mp.setattr(DataFrameWriter, "parquet", write)
+        elif step == "pointer_tmp":
+            mp.setattr(M.os, "fsync", crash)
+        elif step == "pointer_replace":
+            mp.setattr(M.os, "replace", crash)
+        else:
+            mp.setattr(M.shutil, "rmtree", crash)
+        with pytest.raises(OSError, match="injected fault"):
+            eng.dump()
+    new = ([1, 2, 3], [(1, "old1"), (2, "new2"), (3, "new3")])
+    assert old == ([0, 1, 2], [(0, "old0"), (1, "old1"), (2, "old2")])
+    assert _committed_pair(spark, ws) == (new if step == "gc" else old)
+
+
+def test_dump_leaves_other_workspace_content_alone(spark, tmp_path):
+    """dump() owns only the pointer and the v<N> directories: user files
+    and directories beside them survive, and only the committed version is
+    kept."""
+    ws = tmp_path / "ws"
+    eng = U1MIndexerSpark(spark, dim=2, workspace=str(ws))
+    (ws / "vectors").mkdir(parents=True)
+    (ws / "vectors" / "keep.txt").write_text("mine")
+    (ws / "v2x").mkdir()
+    (ws / "notes.txt").write_text("mine")
+    docs = spark.createDataFrame(
+        [(0, [1.0, 0.0], "a")], "doc_id long, embedding array<double>, text string"
+    )
+    eng.index(docs)
+    eng.dump()
+    eng.delete([0])
+    eng.dump()
+    assert (ws / "vectors" / "keep.txt").read_text() == "mine"
+    assert (ws / "notes.txt").read_text() == "mine" and (ws / "v2x").is_dir()
+    versions = [e for e in os.listdir(ws) if e.startswith("v") and e[1:].isdigit()]
+    assert versions == [(ws / "CURRENT").read_text()]

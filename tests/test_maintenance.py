@@ -200,8 +200,8 @@ def test_status_counts_arithmetic(spark, state):
 
 def test_dump_load_roundtrip(spark, state, tmp_path):
     p = str(tmp_path / "state")
-    M.dump(state, p)
-    back = M.load(spark, p)
+    M.dump(p, {"state": state})
+    back = M.load(spark, p)["state"]
     assert sorted(back.columns) == sorted(state.columns)
     assert back.count() == state.count()
 
